@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * built-ins (codegen'd Catalyst expressions — no UDFs), so the whole
   * P1–P8 chain fuses into one WholeStageCodegen stage and the derived
   * columns push through the parquet scan with column pruning (only
-  * `text` is read). The lemmatizer (app.py:54) is deliberately NOT part
-  * of these oracle-checked paths: WordNet morphy is not SQL-expressible,
-  * so its implementation lives outside this object and is golden-tested
-  * instead of DuckDB-oracle-checked.
+  * `text` is read). The reference's WordNet lemmatizer (app.py:54) is not
+  * implemented: morphy is not SQL-expressible, so it could not be
+  * DuckDB-oracle-checked, and `clean_text` here is the reference's output
+  * without that step.
   */
 object TextOps {
 

@@ -52,14 +52,11 @@ object CorpusOps {
 
   /** P8 + F2: cleaned word count per doc, empty docs dropped.
     *
-    * The word_count column is emitted through `explode(array(...))` — a
-    * one-row Generate — purely as an optimizer barrier: a plain
-    * `select(wc).filter(wc > 0)` gets the predicate pushed through the
-    * projection by substitution, so the whole regex+tokenize+stopword
-    * chain is evaluated TWICE per row (once in Filter, once in Project).
-    * Predicates on generator output are not pushed below a Generate, so
-    * this shape evaluates the chain exactly once per document. Same rows,
-    * same schema.
+    * `explode(array(...))` is a one-row Generate used as an optimizer
+    * barrier: a plain `select(wc).filter(wc > 0)` gets the predicate pushed
+    * through the projection by substitution, evaluating the clean chain
+    * twice per row. Pinned by "wordCounts optimized plan evaluates the clean
+    * regex once".
     */
   def wordCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -75,7 +72,7 @@ object CorpusOps {
        |WHERE word_count > 0 ORDER BY doc_id""".stripMargin
 
   /** clean_text as an oracle-checked per-doc projection (P1-P5, P7, F3, F4;
-    * lemmatizer excluded — non-SQL-expressible, golden-tested separately).
+    * the reference's lemmatizer is not implemented — see [[TextOps]]).
     */
   def cleanTexts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), TextOps.cleanText(col("text")).as("clean_text"))
@@ -90,30 +87,12 @@ object CorpusOps {
     * computed in double and rounded to 4 dp for cross-engine stability.
     */
   def docStats(docs: DataFrame): DataFrame = {
-    // Staged (three-level) projection — each interpreted subtree runs ONCE
-    // per row. HOFs and INSET are CodegenFallback, and per-Project
-    // subexpression elimination does not reliably cover interpreted
-    // subtrees, so every expensive intermediate is materialized as an alias
-    // in a lower Project and only referenced above; CollapseProject keeps a
-    // Project boundary alive when a non-cheap alias is referenced more than
-    // once, so the staging survives optimization.
-    //  - level 1 (r21, "two-level"): `toks` (split + HOF empty-filter) and
-    //    `sum_len` computed once. Interleaved A/B vs single-Project
-    //    (graft.ProfileAB, 3 experiments x 7-16 rounds, 100x corpus):
-    //    ~5-10% on min, ~10-18% on median.
-    //  - level 2 (r22, ADVICE item): `n_stop` (the interpreted HOF
-    //    filter+INSET stopword count, previously expanded TWICE above —
-    //    stop_ratio and quality_score) plus n_tokens/n_distinct staged in a
-    //    middle Project. Interleaved A/B vs the two-level shape
-    //    (graft.ProfileAB, 3 experiments x 12-16 rounds, 100x corpus, 32c):
-    //    median -6.3%/-8.9%/-5.4%, GC time -15%/-25%/-18%, min -2%/+6%/+1%
-    //    — consistent direction on median and GC in all three experiments.
-    //    Result identical (same expressions, only staged); oracle green.
-    //
-    // sum_len: count of non-whitespace chars of the lowered text == sum of
-    // token lengths (tokens are exactly its non-whitespace runs), so one
-    // codegen'd regexp_replace replaces an interpreted transform+aggregate
-    // HOF pair (2.1x on the operator when it landed in r21).
+    // Staged projection: the interpreted HOFs (tokenize's empty-token filter,
+    // the n_stop filter) are aliased in lower Projects and run once per row:
+    // pinned by "docStats optimized plan keeps its staging".
+    // sum_len counts the non-whitespace chars of the lowered text, which equals
+    // the summed token lengths: pinned by "docStats regex sum_len ==
+    // interpreted transform+aggregate formulation".
     val lt = lower(col("text"))
     val base = docs.select(
       col("doc_id"),
@@ -198,8 +177,7 @@ object CorpusOps {
     * to `dropDuplicates` but with a deterministic survivor — at 100 TB this
     * is a single shuffle on the 128-bit key with map-side partial agg. */
   def dedupExact(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      md5(TextOps.cleanText(col("text")).cast("binary")).as("fp"))
+    fingerprints(docs)
       .groupBy("fp")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("dup_cnt"))
       .select("keep_id", "dup_cnt")

@@ -1,6 +1,13 @@
 package graft
 
+import java.nio.file.Files
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpReplace}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,15 +15,18 @@ import org.scalatest.BeforeAndAfterAll
 import graft.functions.TextOps
 import graft.operators.{CorpusOps, TfIdfOps}
 
-/** Round-21 optimization equivalence tests: every operator whose internals
-  * were restructured for performance is checked row-for-row against the
-  * straightforward (pre-optimization) formulation on a corpus of edge
-  * cases — boundary whitespace (empty split tokens), stopword-only docs,
-  * URLs/mentions, uppercase, empty strings, duplicate texts.
+/** Optimization equivalence and plan-shape tests: every operator whose
+  * internals were restructured for performance is checked row-for-row
+  * against the straightforward (pre-optimization) formulation on a corpus of
+  * edge cases — boundary whitespace (empty split tokens), stopword-only docs,
+  * URLs/mentions, uppercase, empty strings, duplicate texts — and each plan
+  * property an operator's shape exists for is asserted on the plan of the
+  * same corpus read back from parquet.
   */
 class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val parquetDir = Files.createTempDirectory("optimized-ops-docs").toFile
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()
@@ -26,9 +36,13 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .appName("optimized-ops-equivalence")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    docs.write.mode("overwrite").parquet(parquetDir.toString)
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    FileUtils.deleteDirectory(parquetDir)
+  }
 
   private def docs: DataFrame = {
     val rows = Seq(
@@ -50,6 +64,23 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     )
     spark.createDataFrame(rows).toDF("doc_id", "text", "lang")
       .withColumn("n_chars", length(col("text")))
+  }
+
+  /** [[docs]] written to parquet and read back: plans over a local relation
+    * are folded at optimization time, so plan shapes are checked on a scan. */
+  private def parquetDocs: DataFrame = spark.read.parquet(parquetDir.toString)
+
+  /** Every expression node of an optimized logical plan, lambdas included. */
+  private def planExprs(plan: LogicalPlan): Seq[Expression] =
+    plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  /** Every node of an executed plan, looking through AQE wrappers and query
+    * stages; a reused exchange is a leaf, so what it reuses counts once. */
+  private def execNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => execNodes(a.executedPlan)
+    case s: QueryStageExec => execNodes(s.plan)
+    case r: ReusedExchangeExec => Seq(r)
+    case other => other +: other.children.flatMap(execNodes)
   }
 
   private def collectSorted(df: DataFrame): Seq[String] =
@@ -96,6 +127,11 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kept = CorpusOps.wordCounts(docs).select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(!kept.contains(2L) && !kept.contains(6L) && !kept.contains(7L))
+  }
+
+  test("wordCounts optimized plan evaluates the clean regex once") {
+    val plan = CorpusOps.wordCounts(parquetDocs).queryExecution.optimizedPlan
+    assert(planExprs(plan).count(_.isInstanceOf[RegExpReplace]) === 1, plan)
   }
 
   test("docStats regex sum_len == interpreted transform+aggregate formulation") {
@@ -146,6 +182,13 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertSameResult(CorpusOps.docStats(docs), reference)
   }
 
+  test("docStats optimized plan keeps its staging") {
+    // one ArrayFilter for tokenize's empty-token filter, one for n_stop; an
+    // unstaged projection repeats them per output column
+    val plan = CorpusOps.docStats(parquetDocs).queryExecution.optimizedPlan
+    assert(planExprs(plan).count(_.isInstanceOf[ArrayFilter]) === 2, plan)
+  }
+
   test("termDocFreq broadcast-join-back == join with countDistinct formulation") {
     val toks = docs.select(col("doc_id"),
       explode(TextOps.cleanTokens(col("text"))).as("term"))
@@ -165,6 +208,32 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dup === Set(2L))
   }
 
+  test("termDocFreq executed plan scans and explodes its input once") {
+    // The executed plan of the collected DataFrame itself: a separate action
+    // (e.g. a noop write) builds a new QueryExecution whose plan does not
+    // show the runtime stage reuse.
+    val df = TfIdfOps.termDocFreq(parquetDocs)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val nodes = execNodes(plan)
+    val scans = nodes.count(_.isInstanceOf[FileSourceScanExec])
+    val generates = nodes.count(_.isInstanceOf[GenerateExec])
+    val reused = nodes.count(_.isInstanceOf[ReusedExchangeExec])
+    assert(scans == 1 && generates == 1 && reused >= 1,
+      s"scans/generates/reused = $scans/$generates/$reused\n$plan")
+  }
+
+  test("dedupExact over fingerprints == inline md5 formulation (analyzed plan)") {
+    val d = docs
+    val inline = d.select(col("doc_id"),
+        md5(TextOps.cleanText(col("text")).cast("binary")).as("fp"))
+      .groupBy("fp")
+      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("dup_cnt"))
+      .select("keep_id", "dup_cnt")
+    assert(CorpusOps.dedupExact(d).queryExecution.analyzed
+      .sameResult(inline.queryExecution.analyzed))
+  }
+
   test("dedupExact groups identical cleaned text across langs deterministically") {
     val out = CorpusOps.dedupExact(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -174,5 +243,15 @@ class OptimizedOpsEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // "" -> one group, survivor min = 2, dup_cnt 3
     assert(out(2L) === 3L)
     assert(!out.contains(9L) && !out.contains(6L) && !out.contains(7L))
+    // Known deviation from the DuckDB twin (which yields NULL): an empty
+    // token list cleans to '' as the reference's " ".join([]) does, so
+    // docs 2, 6 and 7 fingerprint as md5('').
+    val empty = Set(2L, 6L, 7L)
+    val clean = CorpusOps.cleanTexts(docs).collect()
+      .filter(r => empty(r.getLong(0))).map(_.getString(1))
+    assert(clean.toSeq === Seq("", "", ""))
+    val fps = CorpusOps.fingerprints(docs).collect()
+      .filter(r => empty(r.getLong(0))).map(_.getString(1)).toSet
+    assert(fps === Set("d41d8cd98f00b204e9800998ecf8427e"))
   }
 }
